@@ -1977,7 +1977,7 @@ _REFINERS: list[tuple[str, str, dict | None, str]] = [
      "$$'re$$, ' are', 'g'), $$'ve$$, ' have', 'g'), $$'ll$$, ' will', 'g'),"
      "$$'m$$, ' am', 'g')"),
     ("r_text_normalization", "TextNormalizationRefiner", None,
-     r"trim(regexp_replace(translate(text, '‘’“”–—', $$''""--$$), '\s+', ' ', 'g'))"),
+     r"""trim(regexp_replace(translate(text, '‘’“”–—', $$''""--$$), '\s+', ' ', 'g'))"""),
     ("r_remove_stopwords", "RemoveStopwordsRefiner", None,
      f"array_to_string(list_filter({W('text')}, x -> NOT list_contains({SW_SQL}, lower(x))), ' ')"),
 ]
@@ -2430,7 +2430,7 @@ banded AS (SELECT doc_id AS _id, b.band,
            UNION ALL
            -- identity pseudo-band: the operator collapses docs with
            -- IDENTICAL full signatures and links them unconditionally
-           -- (dedup.py:_collapse_exact); star edges within ordinary
+           -- (dedup.py:_NearDupBase.run); star edges within ordinary
            -- band buckets can miss that link when the bucket root
            -- fails the similarity verify, so the oracle must band on
            -- the full signature too (the verify passes trivially at

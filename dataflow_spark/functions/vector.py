@@ -37,6 +37,21 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when((na > 0) & (nb > 0), d / (na * nb))
 
 
+def _dot_sql(a: str, b: str) -> str:
+    return (f"aggregate(zip_with(transform({a}, x -> cast(x as double)), "
+            f"transform({b}, x -> cast(x as double)), (x, y) -> x * y), "
+            "0D, (acc, x) -> acc + x)")
+
+
+def cosine_sql(a: str, b: str) -> str:
+    """SQL-string twin of :func:`cosine` (same left-to-right double
+    arithmetic) for predicates inside higher-order functions; ``a`` and
+    ``b`` are trusted, engine-built SQL expressions."""
+    na, nb = f"sqrt({_dot_sql(a, a)})", f"sqrt({_dot_sql(b, b)})"
+    return (f"CASE WHEN {na} > 0 AND {nb} > 0 "
+            f"THEN {_dot_sql(a, b)} / ({na} * {nb}) END")
+
+
 def l2_distance(a: Column, b: Column) -> Column:
     return F.sqrt(
         F.aggregate(

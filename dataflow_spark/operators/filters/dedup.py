@@ -24,7 +24,7 @@ from typing import Any
 
 import pandas as pd  # module-level: pandas_udf type-hint resolution
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dataflow_spark.core.operator import Operator, ROW_ID, with_row_id
@@ -40,9 +40,9 @@ def _bq(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-# moved to functions/spread.py (shared with similarity/text kernels);
-# re-exported here for the existing call sites below
-_spread_for_udf = spread_for_udf
+#: component label of rows confirmed against an existing corpus (below
+#: every order id, so it wins the min-label)
+_EXISTING_LABEL = -(2 ** 63)
 
 
 def _keep_first(df: DataFrame, key: Column, order_col: str) -> DataFrame:
@@ -81,14 +81,11 @@ def _keep_first(df: DataFrame, key: Column, order_col: str) -> DataFrame:
     # single-parse expr strings (r9): one JVM parse per aggregate
     # instead of the min_by/col/struct py4j chain — same trees, same
     # results, ~3x fewer driver round trips on wide inputs
-    def bq(name: str) -> str:
-        return "`" + name.replace("`", "``") + "`"
-
     if ROW_ID in df.columns and order_col != ROW_ID:
-        okey_sql = f"struct({bq(order_col)}, {bq(ROW_ID)})"
+        okey_sql = f"struct({_bq(order_col)}, {_bq(ROW_ID)})"
     else:
-        okey_sql = bq(order_col)
-    aggs = [F.expr(f"min_by({bq(c)}, {okey_sql})").alias(c)
+        okey_sql = _bq(order_col)
+    aggs = [F.expr(f"min_by({_bq(c)}, {okey_sql})").alias(c)
             for c in df.columns]
     return df.groupBy(key.alias("_dedup_k")).agg(*aggs).drop("_dedup_k")
 
@@ -111,7 +108,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50,
     Components in MapReduce and Beyond"): O(log^2 n) rounds regardless
     of graph diameter — unlike naive min-label propagation, a chain
     component (the shape the oversized-bucket fallback in
-    ``_dedup_by_bands`` emits) converges in logarithmic rounds, not
+    ``_NearDupBase._pairs`` emits) converges in logarithmic rounds, not
     linear. Each round localCheckpoints to truncate lineage.
     The edge list itself is always computed distributedly.
     """
@@ -251,28 +248,27 @@ class _BaseDedup(Operator):
         self.input_keys = (input_key,)
         self.output_keys = ()
 
-    def _ordered(self, df: DataFrame) -> tuple[DataFrame, str]:
-        # track whether with_row_id actually ADDS the column: an input
-        # that legitimately carries a user _row_id alongside an explicit
-        # order_key must keep it through _finish (ADVICE r7)
-        self._row_id_added = ROW_ID not in df.columns
+    def _ordered(self, df: DataFrame) -> tuple[DataFrame, str, bool]:
+        """``(df, order_col, drop_row_id)``: the frame with its order
+        column attached, and whether ``_finish`` must drop ``_row_id`` —
+        only when this call ADDS it: an input that legitimately carries
+        a user ``_row_id`` keeps it."""
+        drop_row_id = ROW_ID not in df.columns and self.order_key != ROW_ID
         if self.order_key and self.order_key in df.columns:
             if self.order_key == ROW_ID:
-                return df, ROW_ID
+                return df, ROW_ID, drop_row_id
             # attach the engine row id as a keep-first tie-breaker: the
             # caller's order_key SHOULD be unique, but nothing enforces
             # it, and on ties independent per-column min_by would
             # otherwise stitch a synthetic row (see _keep_first)
-            return with_row_id(df), self.order_key
-        return with_row_id(df), ROW_ID
+            return with_row_id(df), self.order_key, drop_row_id
+        return with_row_id(df), ROW_ID, drop_row_id
 
-    def _finish(self, out: DataFrame, order_col: str) -> DataFrame:
+    @staticmethod
+    def _finish(out: DataFrame, drop_row_id: bool) -> DataFrame:
         """Drop the engine-added order/tie-break column (never user
         columns)."""
-        if (ROW_ID in out.columns and self.order_key != ROW_ID
-                and getattr(self, "_row_id_added", True)):
-            return out.drop(ROW_ID)
-        return out
+        return out.drop(ROW_ID) if drop_row_id else out
 
 
 @OPERATOR_REGISTRY.register()
@@ -301,8 +297,8 @@ class HashDeduplicateFilter(_BaseDedup):
         raise ValueError(f"unknown hash method {self.method!r}")
 
     def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
-        df, order_col = self._ordered(df)
-        return self._finish(_keep_first(df, self._hash(), order_col), order_col)
+        df, order_col, drop_row_id = self._ordered(df)
+        return self._finish(_keep_first(df, self._hash(), order_col), drop_row_id)
 
 
 @OPERATOR_REGISTRY.register()
@@ -324,13 +320,13 @@ class IncrementalHashDedupFilter(HashDeduplicateFilter):
             raise ValueError("IncrementalHashDedupFilter needs existing=")
         h = self._hash()
         seen = existing.select(self._hash().alias("_seen_h")).distinct()
-        df, order_col = self._ordered(df)
+        df, order_col, drop_row_id = self._ordered(df)
         fresh = (
             df.withColumn("_seen_h", h)
             .join(seen, "_seen_h", "left_anti")
             .drop("_seen_h")
         )
-        return self._finish(_keep_first(fresh, h, order_col), order_col)
+        return self._finish(_keep_first(fresh, h, order_col), drop_row_id)
 
 
 @OPERATOR_REGISTRY.register()
@@ -348,10 +344,10 @@ class CCNetDeduplicateFilter(_BaseDedup):
         return c
 
     def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
-        df, order_col = self._ordered(df)
+        df, order_col, drop_row_id = self._ordered(df)
         return self._finish(
             _keep_first(df, F.md5(self.normalize(F.col(self.input_key))), order_col),
-            order_col)
+            drop_row_id)
 
 
 @OPERATOR_REGISTRY.register()
@@ -367,14 +363,25 @@ class NgramHashDeduplicateFilter(_BaseDedup):
         self.n = n
 
     def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
-        df, order_col = self._ordered(df)
+        df, order_col, drop_row_id = self._ordered(df)
         sh = F.array_sort(F.array_distinct(H.char_shingles(F.col(self.input_key), self.n)))
         return self._finish(
-            _keep_first(df, F.md5(F.concat_ws("", sh)), order_col), order_col)
+            _keep_first(df, F.md5(F.concat_ws("", sh)), order_col), drop_row_id)
 
 
 class _NearDupBase(_BaseDedup):
-    """Shared band-join -> components -> keep-first machinery."""
+    """Shared near-dup template: signature -> exact collapse -> banding
+    -> verified in-bucket pairs -> connected components -> keep-first.
+
+    A subclass supplies three things: ``_signature()`` (the per-row
+    signature Column), ``_bands()`` (a generator Column over the
+    signature ``_v`` yielding ``band``/``h`` rows) and
+    ``_verify_sql(a, b)`` (one SQL predicate over two signature
+    expressions). Buckets propose, the predicate confirms: the signature
+    rides through the bucket shuffle as ``_v``, so confirmation is a
+    filter inside the pair expansion and only verified ``(src, dst)``
+    pairs leave it — no signature lookup joins.
+    """
 
     #: 'star' (default) emits size-1 min-anchored edges per bucket;
     #: 'all' emits all pairs (precision mode), capped by max_bucket_size
@@ -385,181 +392,116 @@ class _NearDupBase(_BaseDedup):
     #: row instead of filtering to survivors — corpus exploration mode;
     #: survivors are exactly the rows where assign column == order id
     assign_key: str | None = None
+    #: SQL key over ``_v`` grouping IDENTICAL signatures for the collapse
+    collapse_key = "md5(concat_ws(',', transform(_v, x -> cast(x as string))))"
 
-    def _collapse_exact(self, sigs: DataFrame,
-                        key: str) -> tuple[DataFrame, DataFrame]:
-        """Collapse rows with IDENTICAL signatures to one representative.
-
-        Degenerate-corpus armor: a billion byte-identical docs share one
-        signature, hence one LSH bucket — and the bucket's collect_list
-        would materialize every id in a single task (OOM at scale).
-        Collapsing first bounds every bucket by the number of DISTINCT
-        signatures. The running-frame window streams through arbitrarily
-        large groups via the external sorter (spills, never buffers the
-        group), unlike an array aggregation.
-
-        Returns (reps, exact_edges): ``reps`` = one row per distinct
-        signature (min ``_nd_id``); ``exact_edges`` = (rep, dup) pairs
-        linking collapsed rows. Survivors are IDENTICAL to banding the
-        full frame: identical signatures have identical band keys and
-        identical verify outcomes, so a dup's connectivity through its
-        rep equals its direct connectivity.
-
-        The window output is PERSISTED (r10): both returned frames (and
-        the caller's signature lookups — every candidate-pair id is a
-        rep) read one cached pass. Unpersisted, Catalyst column-prunes
-        the two branches differently (the reps branch carries the
-        signature, the edges branch only ids), so the corpus-wide
-        signature UDF + window exchange + sort ran TWICE — verified in
-        the r9 executed plan as two separate ShuffleQueryStages. One
-        exchange now carries strictly fewer total bytes than the two it
-        replaces, at any scale; the cache adds 8 bytes/row over the
-        signature persist it supersedes.
-
-        The cache is scoped to ONE run() invocation: every consumer is
-        executed eagerly inside ``_dedup_by_bands`` (the connected-
-        components step materializes the whole pair pipeline), which
-        unpersists it before returning. Without that, Spark's
-        CacheManager ``sameResult``-matches the (deterministic) window
-        plan of the NEXT invocation over the same input and silently
-        serves it the previous invocation's rows — re-executions must
-        recompute from source, and the cache must not outlive the run.
-        """
-        # SQL-string window (r9): one parse instead of the Window-API
-        # py4j chain. min-over-partition (r10) replaces the r9
-        # first-ordered form: identical value (the group's min id), but
-        # ``first`` is a non-deterministic expression, which breaks
-        # ``sameResult`` so the persist above it could never be matched
-        # (every consumer recomputed the window), and its ORDER BY
-        # forced a (key, id) sort where min needs only the key grouping.
-        # ``key`` is a trusted engine-internal SQL fragment.
+    def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
+        df, order_col, drop_row_id = self._ordered(df)
+        df = df.withColumn("_nd_id", F.expr(f"cast({_bq(order_col)} as long)"))
+        # project-then-dedup: only (id, signature) flows through banding,
+        # verify and components; full rows join back on survivors only.
+        # spread_for_udf: under-split inputs (single-row-group files)
+        # would run the signature kernel on one core; spreading the
+        # narrow projection is a no-op whenever the scan parallelizes.
+        sigs = spread_for_udf(df.select("_nd_id", self.input_key)).select(
+            "_nd_id", self._signature().alias("_v"))
+        # Exact-signature collapse — degenerate-corpus armor: a billion
+        # byte-identical docs share one signature, hence one bucket, and
+        # that bucket would send every id to one task.
+        # Banding only the reps (min _nd_id per distinct signature)
+        # bounds every bucket by the number of DISTINCT signatures; the
+        # (rep, dup) edges relink the rest. Survivors are identical to
+        # banding the full frame: identical signatures have identical
+        # band keys and verify outcomes. The running-frame window
+        # streams arbitrarily large groups through the external sorter.
+        # min (not first-ordered) keeps the plan deterministic so both
+        # branches below read ONE persisted pass instead of recomputing
+        # the signature UDF + window twice. The cache is local to this
+        # call: components are eager, so it has no consumer afterwards,
+        # and left cached, Spark's CacheManager would sameResult-serve
+        # it to the next invocation over the same input.
         with_rep = sigs.selectExpr(
-            "*",
-            f"min(_nd_id) OVER (PARTITION BY {key}) AS _rep").persist()
-        self._collapse_cached = with_rep
-        reps = with_rep.filter("_nd_id = _rep").drop("_rep")
-        exact_edges = (
-            with_rep.filter("_nd_id != _rep")
-            .selectExpr("_rep AS src", "_nd_id AS dst")
-        )
-        return reps, exact_edges
-
-    def _dedup_by_bands(self, df: DataFrame, banded: DataFrame,
-                        order_col: str, verify=None,
-                        extra_edges: DataFrame | None = None,
-                        verify_expr: str | None = None) -> DataFrame:
-        """``banded``: DataFrame[_nd_id, band struct col 'bands' exploded].
-
-        verify: optional callable (cand_df with a_id/b_id) -> filtered
-        cand_df, applied to candidate pairs before components.
-        extra_edges: pre-verified (src, dst) pairs unioned in after
-        verification (exact-signature collapse edges).
-        verify_expr: alternative to ``verify`` for FIXED-WIDTH signatures
-        small enough to carry through the bucket shuffle: ``banded``
-        additionally holds the signature as ``_v``, pairs come out with
-        ``_va``/``_vb`` attached, and this SQL predicate over them
-        replaces the two signature-lookup joins entirely (guide §2.4:
-        remove shuffles outright). At scale the joins re-shuffle or
-        re-broadcast the corpus-sized rep table twice per run; carrying
-        an 8-byte value per banded row costs num_bands*8 bytes per doc
-        in one shuffle instead. Only used where the signature is a
-        single long (SimHash); array signatures (MinHash 64 longs,
-        embeddings) would multiply the bucket collect_list buffers and
-        keep the join path.
-        """
-        # one shuffle (groupBy bucket) + in-bucket edge expansion instead
-        # of a two-sided self-join on (band, h): same components, half
-        # the shuffled bytes. Edge expansion per bucket of size k:
-        #   star (default): k-1 edges anchoring every id to the bucket
-        #     min — identical connected components to all-pairs through
-        #     that bucket, linear not quadratic. (The reference's
-        #     datasketch-LSH greedy insert is the same star shape and
-        #     does not verify at all; our verify runs on the star edges,
-        #     so precision is still >= reference.)
-        #   all: k(k-1)/2 edges, for maximum verify precision; buckets
-        #     above max_bucket_size emit a consecutive chain instead so
-        #     adversarial near-identical corpora stay linear.
-        carry = verify_expr is not None
-        # sort_array over struct(_nd_id, _v) orders by _nd_id first —
-        # _nd_id is unique within a bucket (reps), so the element order
-        # (hence star anchor / chain shape) is identical to the id-only
-        # form and the same buckets emit the same (src, dst) pairs.
-        elem = "struct(_nd_id, _v)" if carry else "_nd_id"
-        buckets = (
-            banded.groupBy("band", "h")
-            .agg(F.expr(f"sort_array(collect_list({elem})) AS _ids"))
-            .filter("size(_ids) > 1")
-        )
-        # single-parse SQL strings (r9): the Column-lambda forms of these
-        # expansions cost ~100+ py4j round trips per plan build; one
-        # string parses the identical tree in one JVM call. Results
-        # unchanged. inline() = explode + struct-splat in one generator
-        # select (same trick as banding): the old explode -> project
-        # pair cost ~75 more round trips and left a dead struct
-        # projection in the plan.
-        if carry:
-            def emit(x: str, y: str) -> str:
-                return (f"named_struct('src', {x}._nd_id, 'dst', {y}._nd_id,"
-                        f" '_va', {x}._v, '_vb', {y}._v)")
-        else:
-            def emit(x: str, y: str) -> str:
-                return f"named_struct('src', {x}, 'dst', {y})"
-        if self.pair_expansion == "star":
-            pair_sql = (
-                "transform(slice(_ids, 2, size(_ids) - 1), "
-                f"y -> {emit('element_at(_ids, 1)', 'y')})")
-        else:
-            mbs = int(self.max_bucket_size)
-            pair_sql = (
-                f"CASE WHEN size(_ids) > {mbs} THEN "
-                "transform(slice(_ids, 1, size(_ids) - 1), (x, i) -> "
-                f"{emit('x', 'element_at(_ids, i + 2)')}) "
-                "ELSE flatten(transform(_ids, (x, i) -> "
-                "transform(slice(_ids, i + 2, size(_ids)), "
-                f"y -> {emit('x', 'y')}))) END")
-        if carry:
-            # verify as a codegen'd filter fused into the expansion
-            # stage — verify_expr is a pure function of (src, dst)
-            # through their signatures, so filter-then-distinct keeps
-            # exactly the rows the old distinct-then-join-verify kept,
-            # while the distinct exchange sees only surviving pairs.
-            pairs = (buckets.selectExpr(f"inline({pair_sql})")
-                     .filter(verify_expr)
-                     .select("src", "dst").distinct())
-        else:
-            pairs = buckets.selectExpr(f"inline({pair_sql})").distinct()
-            if verify is not None:
-                pairs = verify(pairs)
-        if extra_edges is not None:
-            pairs = pairs.union(extra_edges.select("src", "dst"))
-        comp = connected_components(pairs)
-        # the components step above is eager (driver union-find or
-        # per-round localCheckpoint contraction), so the collapse cache
-        # has no consumers left: release it so it cannot leak across
-        # invocations (or be sameResult-served to a later run — every
-        # execution must compute from source; see _collapse_exact)
-        cached = self.__dict__.pop("_collapse_cached", None)
-        if cached is not None:
-            cached.unpersist()
+            "*", f"min(_nd_id) OVER (PARTITION BY {self.collapse_key}) AS _rep"
+        ).persist()
+        try:
+            reps = with_rep.filter("_nd_id = _rep").select("_nd_id", "_v")
+            edges = (with_rep.filter("_nd_id != _rep")
+                     .selectExpr("_rep AS src", "_nd_id AS dst"))
+            gone = self._matched(reps, **kwargs)
+            if gone is not None:
+                # matched reps skip banding and join one component
+                # labelled _EXISTING_LABEL, which takes their exact
+                # copies along: the eager components step below is then
+                # the only consumer of the corpus-side plan
+                reps = reps.join(gone, "_nd_id", "left_anti")
+                edges = edges.union(gone.select(
+                    F.lit(_EXISTING_LABEL).alias("src"), "_nd_id"))
+            pairs = self._pairs(reps.select("_nd_id", "_v", self._bands()))
+            comp = connected_components(pairs.distinct().union(edges))
+        finally:
+            with_rep.unpersist()
         # keep-first without a window: the component label IS the min
-        # order-id of the cluster (union-find min-root / min-label
-        # propagation), so "first occurrence" == rows whose own id equals
-        # their component label; unclustered rows (left-join miss) stay.
+        # order-id of the cluster, so "first occurrence" == rows whose
+        # own id equals their label; unclustered rows (left-join miss)
+        # stay. Assignment mode keeps every row and exposes the label.
         out = df.join(comp.toDF("_nd_id", "component"), "_nd_id", "left")
-        # same coalesce tree as the old Column form, one parse (r9)
-        if getattr(self, "assign_key", None):
-            # assignment mode: keep every row, expose its cluster label
-            # (= min order-id of its near-dup component; singletons get
-            # their own id) instead of filtering
-            return self._finish(
-                out.withColumn(self.assign_key,
-                               F.expr("coalesce(component, _nd_id)"))
-                .drop("component", "_nd_id"),
-                order_col)
-        return self._finish(
-            out.filter("coalesce(component, _nd_id) = _nd_id")
-            .drop("component", "_nd_id"),
-            order_col)
+        label = F.expr("coalesce(component, _nd_id)")
+        if self.assign_key:
+            out = (out.filter(label != F.lit(_EXISTING_LABEL))
+                   .withColumn(self.assign_key, label))
+        else:
+            out = out.filter(label == F.col("_nd_id"))
+        return self._finish(out.drop("component", "_nd_id"), drop_row_id)
+
+    def _matched(self, reps: DataFrame, **kwargs: Any) -> DataFrame | None:
+        """Rep ids (``_nd_id``) confirmed as near-dups of rows outside
+        the input, dropped with their copies; none by default."""
+        return None
+
+    def _pairs(self, banded: DataFrame) -> DataFrame:
+        """Verified ``(src, dst)`` pairs inside each ``(band, h)`` bucket
+        of ``banded`` (reps only, so ``_nd_id`` is unique per bucket).
+
+        Members meet their partners through windows, which stream a
+        bucket through the external sorter; only all-pairs buckets of at
+        most max_bucket_size members are gathered into one array. A
+        bucket can hold a corpus-sized share of the reps (SemDedup's
+        default 4 sign bits per band give 16 buckets), so an array of
+        its signatures would not fit one row.
+
+        star (default): every member against the bucket min — identical
+        components to all-pairs through that bucket, linear not
+        quadratic (the reference's datasketch-LSH greedy insert has the
+        same shape and does not verify at all). all: k(k-1)/2 pairs for
+        maximum verify precision; buckets above max_bucket_size emit a
+        consecutive chain instead so adversarial corpora stay linear.
+        """
+        def keep(ys: str, x: str) -> str:
+            # the verify filter runs before the struct is built, so no
+            # signature is copied per pair
+            return (f"transform(filter({ys}, q -> "
+                    f"{self._verify_sql(f'{x}._v', 'q._v')}), "
+                    f"q -> named_struct('src', {x}._nd_id, 'dst', q._nd_id))")
+
+        me = "struct(_nd_id, _v)"
+        bucket = "PARTITION BY band, h"
+        if self.pair_expansion == "star":
+            return (banded.selectExpr(
+                        f"{me} AS _q", f"min_by({me}, _nd_id) OVER ({bucket}) AS _x")
+                    .filter("_x._nd_id != _q._nd_id")
+                    .selectExpr(f"inline({keep('array(_q)', '_x')})"))
+        mbs = int(self.max_bucket_size)
+        sized = banded.selectExpr(
+            "band", "h", f"{me} AS _q", f"count(1) OVER ({bucket}) AS _k",
+            f"lag({me}) OVER ({bucket} ORDER BY _nd_id) AS _x")
+        chain = (sized.filter(f"_k > {mbs} AND _x IS NOT NULL")
+                 .selectExpr(f"inline({keep('array(_q)', '_x')})"))
+        # sort_array orders the structs by _nd_id first
+        each = ("inline(flatten(transform(slice(_ids, 1, size(_ids) - 1), "
+                f"(p, i) -> {keep('slice(_ids, i + 2, size(_ids))', 'p')})))")
+        small = (sized.filter(f"_k BETWEEN 2 AND {mbs}").groupBy("band", "h")
+                 .agg(F.expr("sort_array(collect_list(_q)) AS _ids")))
+        return chain.union(small.selectExpr(each))
 
 
 @OPERATOR_REGISTRY.register()
@@ -571,14 +513,13 @@ class MinHashDeduplicateFilter(_NearDupBase):
     MinHash over char-5-gram shingles, 4 bands x 16 rows (collision
     threshold ~(1/4)^(1/16) = 0.92), candidate pairs verified by
     signature-estimated Jaccard >= threshold, connected components, keep
-    min order-id per component. All signature math is JVM-side Column
-    expressions (functions/hashing.py); no Python in the hot path.
+    min order-id per component. Signature kernels are Arrow-batched
+    pandas UDFs (functions/hashing.py); banding and verify are JVM-side.
     """
 
     def __init__(self, input_key: str = "text", threshold: float = 0.9,
                  num_perm: int = 64, num_bands: int | str = 4,
-                 shingle_n: int = 5,
-                 order_key: str | None = None, verify_jaccard: bool = True,
+                 shingle_n: int = 5, order_key: str | None = None,
                  pair_expansion: str = "star", hash_impl: str = "fast",
                  assign_key: str | None = None):
         super().__init__(input_key, order_key)
@@ -596,61 +537,25 @@ class MinHashDeduplicateFilter(_NearDupBase):
             self.num_bands = num_bands
             self.rows_per_band = num_perm // num_bands
         self.shingle_n = shingle_n
-        self.verify_jaccard = verify_jaccard
         #: 'fast' = splitmix64 numpy rolling hash (production);
         #: 'md5' = md5-based shingle hashes + plain band keys, bit-exactly
         #: reproducible in external SQL engines (the oracle contract)
         self.hash_impl = hash_impl
 
-    def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
-        df, order_col = self._ordered(df)
-        df = df.withColumn("_nd_id", F.expr(f"cast({_bq(order_col)} as long)"))
-        if self.hash_impl == "md5":
-            sig_udf = H.minhash_md5_udf(self.num_perm, self.shingle_n)
-            bands_sql = H.band_keys_plain_sql(
-                "_sig", self.num_bands, self.rows_per_band)
-        else:
-            sig_udf = H.minhash64_udf(self.num_perm, self.shingle_n)
-            bands_sql = H.band_hashes_sql(
-                "_sig", self.num_bands, self.rows_per_band)
-        # project-then-dedup: only (id, signature) flows through banding,
-        # verify, and components — the scan on this branch reads just
-        # [order_col, input_key]; full rows join back on survivors only.
-        # The signature pass is persisted INSIDE _collapse_exact (window
-        # output) — one cached materialization feeds banding, the exact
-        # edges, and the verify lookups (every pair id is a rep).
-        # _spread_for_udf: under-split inputs (single-row-group files)
-        # would run the md5 kernel on one core; spreading the narrow
-        # projection is a no-op whenever the scan already parallelizes.
-        sigs = _spread_for_udf(
-            df.select("_nd_id", self.input_key)).select(
-            F.col("_nd_id"), sig_udf(F.col(self.input_key)).alias("_sig"))
-        # exact-signature collapse: bounds bucket sizes on degenerate
-        # (mass-duplicate) corpora; survivors provably unchanged
-        # (single-parse expr strings here and below: same trees as the
-        # old Column-lambda forms, ~10x fewer py4j round trips — r9)
-        reps, exact_edges = self._collapse_exact(
-            sigs, "md5(concat_ws(',', transform(_sig, x -> cast(x as string))))")
-        # inline() = explode + struct-splat in one generator select
-        banded = reps.selectExpr("_nd_id", f"inline({bands_sql})")
+    def _signature(self) -> Column:
+        udf = H.minhash_md5_udf if self.hash_impl == "md5" else H.minhash64_udf
+        return udf(self.num_perm, self.shingle_n)(F.col(self.input_key))
 
-        verify = None
-        if self.verify_jaccard:
-            est_sql = ("cast(size(filter(zip_with(_sig_a, _sig_b, "
-                       "(x, y) -> x = y), eq -> eq)) as double) / "
-                       f"{int(self.num_perm)} >= "
-                       f"cast({float(self.threshold)!r} as double)")
+    def _bands(self) -> Column:
+        bands = (H.band_keys_plain_sql if self.hash_impl == "md5"
+                 else H.band_hashes_sql)
+        return F.expr(f"inline({bands('_v', self.num_bands, self.rows_per_band)})")
 
-            def verify(pairs: DataFrame) -> DataFrame:
-                return (
-                    pairs.join(reps.toDF("src", "_sig_a"), "src")
-                    .join(reps.toDF("dst", "_sig_b"), "dst")
-                    .filter(F.expr(est_sql))
-                    .select("src", "dst")
-                )
-
-        return self._dedup_by_bands(df, banded, order_col, verify,
-                                    extra_edges=exact_edges)
+    def _verify_sql(self, a: str, b: str) -> str:
+        # signature-estimated Jaccard: share of equal permutation minima
+        return (f"cast(size(filter(zip_with({a}, {b}, (x, y) -> x = y), "
+                f"eq -> eq)) as double) / {int(self.num_perm)} >= "
+                f"cast({float(self.threshold)!r} as double)")
 
 
 @OPERATOR_REGISTRY.register()
@@ -658,10 +563,12 @@ class SimHashDeduplicateFilter(_NearDupBase):
     """SimHash near-dup removal via band blocking + Hamming verify.
 
     Reference: general_text/filter/simhash_deduplicate_filter.py:56-91
-    (O(n^2) greedy). Ours: 64-bit simhash (Column expr), 4x16-bit bands
-    (pigeonhole guarantees recall for Hamming <= 3), xor/bit_count
-    verify, components, keep earliest.
+    (O(n^2) greedy). Ours: 64-bit simhash (Arrow-batched pandas UDF),
+    4x16-bit bands (pigeonhole guarantees recall for Hamming <= 3),
+    xor/bit_count verify, components, keep earliest.
     """
+
+    collapse_key = "_v"
 
     def __init__(self, input_key: str = "text", max_hamming: int = 3,
                  shingle_n: int = 4, order_key: str | None = None,
@@ -676,40 +583,15 @@ class SimHashDeduplicateFilter(_NearDupBase):
         #: shingle hashes, reproducible in external SQL (oracle contract)
         self.hash_impl = hash_impl
 
-    def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
-        df, order_col = self._ordered(df)
-        df = df.withColumn("_nd_id", F.expr(f"cast({_bq(order_col)} as long)"))
-        sim_udf = (H.simhash_md5_udf(self.shingle_n) if self.hash_impl == "md5"
-                   else H.simhash64_udf(self.shingle_n))
-        # project-then-dedup: only (id, simhash) feeds banding + Hamming
-        # verify; the collapse window output is persisted inside
-        # _collapse_exact — one cached pass feeds every consumer.
-        # _spread_for_udf: see MinHashDeduplicateFilter — cores-wide
-        # signature stage on under-split inputs, no-op otherwise.
-        sims = _spread_for_udf(
-            df.select("_nd_id", self.input_key)).select(
-            F.col("_nd_id"), sim_udf(F.col(self.input_key)).alias("_simhash"))
-        # exact-signature collapse (see _collapse_exact): degenerate-
-        # corpus bucket armor, survivors unchanged
-        reps, exact_edges = self._collapse_exact(sims, "_simhash")
-        # single-parse expr strings: same trees as the Column forms,
-        # ~10x fewer py4j round trips per plan build (r9); inline() =
-        # explode + struct-splat in one generator select. The 8-byte
-        # simhash rides along as _v (r10): Hamming verify becomes a
-        # filter fused into the pair-expansion stage instead of two
-        # signature-lookup joins against the rep table (guide §2.4/§3
-        # — at scale those joins re-shuffle the corpus-sized rep frame
-        # twice; the carry costs num_bands*8 bytes per doc in the one
-        # bucket shuffle).
-        banded = reps.selectExpr(
-            "_nd_id", "_simhash AS _v",
-            f"inline({H.simhash_bands_sql('_simhash')})")
+    def _signature(self) -> Column:
+        udf = H.simhash_md5_udf if self.hash_impl == "md5" else H.simhash64_udf
+        return udf(self.shingle_n)(F.col(self.input_key))
 
-        ham_sql = f"bit_count(_va ^ _vb) <= {int(self.max_hamming)}"
+    def _bands(self) -> Column:
+        return F.expr(f"inline({H.simhash_bands_sql('_v')})")
 
-        return self._dedup_by_bands(df, banded, order_col,
-                                    extra_edges=exact_edges,
-                                    verify_expr=ham_sql)
+    def _verify_sql(self, a: str, b: str) -> str:
+        return f"bit_count({a} ^ {b}) <= {int(self.max_hamming)}"
 
 
 @OPERATOR_REGISTRY.register()
@@ -719,8 +601,7 @@ class SemDeduplicateFilter(_NearDupBase):
     Reference: general_text/filter/sem_deduplicate_filter.py:115-161
     (full N x N cosine matrix). Ours: random-hyperplane LSH (sign bits of
     seeded projections -> band keys), exact cosine verify on candidates,
-    components, keep earliest. Hyperplanes are literal arrays broadcast
-    into the plan; dot products are zip_with/aggregate — JVM-side.
+    components, keep earliest. Cosine is zip_with/aggregate — JVM-side.
     """
 
     def __init__(self, embedding_key: str = "embedding", eps: float = 0.05,
@@ -736,38 +617,17 @@ class SemDeduplicateFilter(_NearDupBase):
         self.seed = seed
         self.dim = dim
 
-    def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
-        df, order_col = self._ordered(df)
-        df = df.withColumn("_nd_id", F.expr(f"cast({_bq(order_col)} as long)"))
+    def _signature(self) -> Column:
+        return F.col(self.input_key)
+
+    def _bands(self) -> Column:
         # vectorized sign-bit band keys (functions/vector.py) — the
         # per-plane expression tree is CodegenFallback, ~1000x slower
-        bands_udf = V.hyperplane_bands_udf(self.num_planes, self.num_bands, self.seed)
-        # exact-embedding collapse (see _collapse_exact): byte-identical
-        # vectors band once, dups link via rep edges
-        emb_rows = df.select("_nd_id", self.input_key)
-        emb_bq = "`" + self.input_key.replace("`", "``") + "`"
-        reps, exact_edges = self._collapse_exact(
-            emb_rows,
-            f"md5(concat_ws(',', transform({emb_bq}, x -> cast(x as string))))")
-        banded = reps.select(
-            "_nd_id",
-            F.posexplode(bands_udf(F.col(self.input_key))).alias("band", "h"),
-        )
+        bands = V.hyperplane_bands_udf(self.num_planes, self.num_bands, self.seed)
+        return F.posexplode(bands(F.col("_v"))).alias("band", "h")
 
-        thr = 1.0 - self.eps
-
-        def verify(pairs: DataFrame) -> DataFrame:
-            # every pair id is a rep; reps (cached by _collapse_exact)
-            # carries (_nd_id, embedding) — no second scan of df
-            return (
-                pairs.join(reps.toDF("src", "_va"), "src")
-                .join(reps.toDF("dst", "_vb"), "dst")
-                .filter(V.cosine(F.col("_va"), F.col("_vb")) >= thr)
-                .select("src", "dst")
-            )
-
-        return self._dedup_by_bands(df, banded, order_col, verify,
-                                    extra_edges=exact_edges)
+    def _verify_sql(self, a: str, b: str) -> str:
+        return f"{V.cosine_sql(a, b)} >= cast({1.0 - self.eps!r} as double)"
 
 
 @OPERATOR_REGISTRY.register()
@@ -788,65 +648,23 @@ class IncrementalMinHashDedupFilter(MinHashDeduplicateFilter):
             **kwargs: Any) -> DataFrame:
         if existing is None:
             raise ValueError("IncrementalMinHashDedupFilter needs existing=")
-        if self.hash_impl == "md5":
-            sig_udf = H.minhash_md5_udf(self.num_perm, self.shingle_n)
-            bands_sql = H.band_keys_plain_sql(
-                "_sig", self.num_bands, self.rows_per_band)
-        else:
-            sig_udf = H.minhash64_udf(self.num_perm, self.shingle_n)
-            bands_sql = H.band_hashes_sql(
-                "_sig", self.num_bands, self.rows_per_band)
+        return super().run(df, existing=existing, **kwargs)
 
-        df, order_col = self._ordered(df)
-        new_sigs = (
-            df.select(F.col(order_col).cast("long").alias("_nid"),
-                      self.input_key)
-            .withColumn("_sig", sig_udf(F.col(self.input_key)))
-            .select("_nid", "_sig").persist()
-        )
+    def _matched(self, reps: DataFrame, existing: DataFrame | None = None,
+                 **kwargs: Any) -> DataFrame:
         # existing side: one representative per DISTINCT signature (the
         # same degenerate-corpus armor; a billion identical archive rows
         # contribute one band row each)
-        ex_sigs = (
-            existing.select(sig_udf(F.col(self.input_key)).alias("_sig"))
-            .withColumn("_eid", F.expr(
-                "md5(concat_ws(',', transform(_sig, x -> cast(x as string))))"))
-            .dropDuplicates(["_eid"])
-            .persist()
-        )
-
-        def banded(src: DataFrame, idc: str):
-            return src.select(
-                idc, F.explode(F.expr(bands_sql)).alias("bh"),
-            ).select(idc, F.col("bh.band").alias("band"),
-                     F.col("bh.h").alias("h"))
-
-        cand = (banded(new_sigs, "_nid")
-                .join(banded(ex_sigs, "_eid"), ["band", "h"])
-                .select("_nid", "_eid").distinct())
-        est = (cand.join(new_sigs, "_nid")
-               .join(ex_sigs.select("_eid", F.col("_sig").alias("_esig")),
-                     "_eid")
-               .withColumn("_est", F.expr(
-                   "cast(size(filter(zip_with(_sig, _esig, "
-                   "(x, y) -> x = y), eq -> eq)) as double) / "
-                   f"{int(self.num_perm)}")))
-        # eager localCheckpoint scopes the two signature caches to THIS
-        # invocation (r10, see _collapse_exact): matched is the last
-        # consumer of new_sigs/ex_sigs, and both are deterministic plans
-        # a later run() over the same input would otherwise be silently
-        # served by the CacheManager (sameResult match). The checkpoint
-        # holds one long per matched row — strictly smaller than the
-        # signature caches it releases; the returned survivors plan
-        # references the checkpoint, never the caches.
-        matched = (est.filter(F.col("_est") >= self.threshold)
-                   .select("_nid").distinct()
-                   .localCheckpoint(eager=True))
-        new_sigs.unpersist()
-        ex_sigs.unpersist()
-        fresh = (df.withColumn("_nid", F.col(order_col).cast("long"))
-                 .join(matched, "_nid", "left_anti").drop("_nid"))
-        return super().run(fresh)
+        ex_sigs = (existing.select(self._signature().alias("_v"))
+                   .withColumn("_eid", F.expr(self.collapse_key))
+                   .dropDuplicates(["_eid"]))
+        # both signatures ride through the band join, so the Jaccard
+        # predicate confirms each candidate with no lookup join
+        return (reps.select("_nd_id", "_v", self._bands())
+                .join(ex_sigs.select(F.col("_v").alias("_ev"), self._bands()),
+                      ["band", "h"])
+                .filter(self._verify_sql("_v", "_ev"))
+                .select("_nd_id").distinct())
 
 
 def _bloom_positions(h1, h2, m: int, k: int):
@@ -1013,7 +831,7 @@ class BloomIncrementalDedupFilter(HashDeduplicateFilter):
 
         h = self._hash()
         h1, h2 = self._hash_pair()
-        df, order_col = self._ordered(df)
+        df, order_col, drop_row_id = self._ordered(df)
         df2 = (df.withColumn("_seen_h", h)
                  .withColumn("_maybe", member(h1, h2)))
 
@@ -1037,4 +855,4 @@ class BloomIncrementalDedupFilter(HashDeduplicateFilter):
 
         fresh = fresh_pos.unionByName(neg)
         out = _keep_first(fresh, F.col("_seen_h"), order_col)
-        return self._finish(out.drop("_seen_h", "_maybe"), order_col)
+        return self._finish(out.drop("_seen_h", "_maybe"), drop_row_id)

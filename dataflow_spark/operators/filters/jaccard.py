@@ -184,7 +184,7 @@ class NgramJaccardDeduplicateFilter(_NearDupBase):
         return with_sh.mapInPandas(compute, schema="src long, dst long")
 
     def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
-        df, order_col = self._ordered(df)
+        df, order_col, drop_row_id = self._ordered(df)
         df = df.withColumn("_nd_id", F.col(order_col).cast("long"))
         # distinct shingles hashed to LONGS once: set ops on bigint arrays
         # shuffle ~5x fewer bytes and intersect ~5x faster than 5-char
@@ -223,7 +223,7 @@ class NgramJaccardDeduplicateFilter(_NearDupBase):
         )
         kept = _keep_first(out, F.col("component"),
                            order_col).drop("component", "_nd_id")
-        return self._finish(kept, order_col)
+        return self._finish(kept, drop_row_id)
 
     def _minhash_edges(self, with_sh: DataFrame) -> DataFrame:
         """Opt-in approximate fallback (``on_budget_exceeded='minhash'``):

@@ -323,7 +323,7 @@ class IncrementalSubstringDedupFilter(_BaseDedup):
         if existing is None:
             raise ValueError("IncrementalSubstringDedupFilter needs "
                              "existing= (the already-kept corpus)")
-        df, order_col = self._ordered(df)
+        df, order_col, drop_row_id = self._ordered(df)
         # existing only needs (text, an order id); never returned
         exi = with_row_id(existing)
         ex_oid = (F.col(self.order_key).cast("long")
@@ -348,7 +348,7 @@ class IncrementalSubstringDedupFilter(_BaseDedup):
             kept_new,
             F.col(order_col).cast("long") == F.col("_inc_k"),
             "left_semi")
-        return self._finish(out, order_col)
+        return self._finish(out, drop_row_id)
 
 
 @OPERATOR_REGISTRY.register()
@@ -492,7 +492,7 @@ class SubstringDeduplicateFilter(_BaseDedup):
             gram_size=gram_size, max_candidate_pairs=max_candidate_pairs)
 
     def run(self, df: DataFrame, **kwargs: Any) -> DataFrame:
-        df, order_col = self._ordered(df)
+        df, order_col, drop_row_id = self._ordered(df)
         if order_col == ROW_ID:
             oid = F.col(ROW_ID)
         else:
@@ -508,4 +508,4 @@ class SubstringDeduplicateFilter(_BaseDedup):
         return self._finish(
             out.filter(keep == F.col("_sub_oid"))
             .drop("component", "_sub_oid"),
-            order_col)
+            drop_row_id)

@@ -9,7 +9,9 @@ from source (the bench and the oracle both rely on that), and the cache
 must not accumulate across a long session.
 
 Guard: after a near-dup run() returns, the session holds zero cached
-RDDs and the CacheManager is empty; a mixture-sampler ``cache_input``
+RDDs, the CacheManager is empty and the operator object holds no
+per-run state (two run() calls on one object must not share a cache
+handle); a mixture-sampler ``cache_input``
 run leaves no CacheManager entry either (it materializes via
 localCheckpoint, which is invocation-local by construction).
 """
@@ -35,48 +37,41 @@ def docs(spark):
     return spark.createDataFrame(rows, ["doc_id", "text"])
 
 
-def test_minhash_run_leaves_no_cache(spark, docs):
+_NEAR_DUP = {
+    "MinHashDeduplicateFilter": ({"input_key": "text"}, False),
+    "SimHashDeduplicateFilter": ({"input_key": "text"}, False),
+    "SemDeduplicateFilter": ({"embedding_key": "embedding"}, False),
+    "IncrementalMinHashDedupFilter": ({"input_key": "text"}, True),
+}
+
+
+@pytest.mark.parametrize("name", list(_NEAR_DUP))
+def test_neardup_run_leaves_no_state(spark, docs, name):
+    """After run() returns: the CacheManager is empty, no cached RDD
+    was added (the collapse cache / signature persists are released
+    inside run()), and nothing was stored on the operator object."""
     spark.catalog.clearCache()  # isolate from other tests' cache state
+    params, incremental = _NEAR_DUP[name]
     base = _n_cached_rdds(spark)  # lingering checkpoint blocks allowed
-    op = get_operator("MinHashDeduplicateFilter",
-                      {"input_key": "text", "order_key": "doc_id"})
-    out1 = op.run(docs)
-    assert _n_cached_rdds(spark) <= base
-    assert _cache_manager_empty(spark)
-    n1 = out1.count()
-    # second invocation recomputes and agrees (nothing cached to serve it)
-    out2 = op.run(docs)
-    assert _n_cached_rdds(spark) <= base
-    assert out2.count() == n1
-
-
-def test_simhash_run_leaves_no_cache(spark, docs):
-    spark.catalog.clearCache()  # isolate from other tests' cache state
-    base = _n_cached_rdds(spark)  # lingering checkpoint blocks allowed
-    op = get_operator("SimHashDeduplicateFilter",
-                      {"input_key": "text", "order_key": "doc_id"})
-    out = op.run(docs)
-    assert _n_cached_rdds(spark) <= base
-    assert _cache_manager_empty(spark)
-    out.count()
-    assert _n_cached_rdds(spark) <= base
-
-
-def test_incremental_minhash_run_leaves_no_cache(spark, docs):
-    spark.catalog.clearCache()  # isolate from other tests' cache state
-    op = get_operator("IncrementalMinHashDedupFilter",
-                      {"input_key": "text", "order_key": "doc_id"})
-    existing = docs.filter(F.col("doc_id") % 3 == 0)
-    new = docs.filter(F.col("doc_id") % 3 != 0)
-    out1 = op.run(new, existing=existing)
-    # the signature persists are released inside run() (the eager
-    # matched checkpoint is their last consumer); only checkpoint
-    # blocks may remain, and those are never CacheManager-matched
-    assert _cache_manager_empty(spark)
-    n1 = out1.count()
-    out2 = op.run(new, existing=existing)
-    assert _cache_manager_empty(spark)
-    assert out2.count() == n1
+    op = get_operator(name, {**params, "order_key": "doc_id"})
+    before = dict(vars(op))
+    df = docs.withColumn("embedding", F.array(
+        (F.col("doc_id") % 7).cast("double"), F.lit(1.0),
+        (F.col("doc_id") % 3).cast("double")))
+    kwargs = {}
+    if incremental:
+        kwargs["existing"] = df.filter(F.col("doc_id") % 3 == 0)
+        df = df.filter(F.col("doc_id") % 3 != 0)
+    counts = []
+    for _ in range(2):
+        out = op.run(df, **kwargs)
+        assert _cache_manager_empty(spark)
+        assert _n_cached_rdds(spark) <= base
+        assert vars(op) == before
+        counts.append(out.count())
+    # the second invocation recomputes and agrees (nothing cached to
+    # serve it)
+    assert counts[0] == counts[1]
 
 
 def test_mixture_sampler_cache_input_no_cache_manager_entry(spark):

@@ -1,5 +1,6 @@
 """Dedup semantics: first-occurrence-wins, near-dup clustering."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from dataflow_spark.core.registry import get_operator
@@ -140,6 +141,9 @@ def test_simhash_pair_expansion_modes_agree(spark):
     op_all = SimHashDeduplicateFilter(order_key="doc_id",
                                       pair_expansion="all")
     kept_all = {r.doc_id for r in op_all.run(df).collect()}
+    # agreement is a property of THIS corpus, not a general invariant:
+    # star verifies each member against the bucket anchor only, so it
+    # can miss a pair all-pairs keeps when the anchor fails the check
     assert kept_star == kept_all
     # oversized-bucket chain fallback: chain edges verify pairwise, so
     # it is a recall-bounded fallback (documented) — but identical docs
@@ -153,6 +157,28 @@ def test_simhash_pair_expansion_modes_agree(spark):
     op_chain.max_bucket_size = 1
     assert [r.doc_id for r in
             op_chain.run(ddf).select("doc_id").collect()] == [0]
+
+
+def test_pair_shapes_on_one_bucket(spark):
+    """Verified pairs of one bucket: star checks members against the
+    bucket min, all-pairs every pair, and the oversized-bucket chain
+    consecutive members only (Hamming <= 3 over the carried _v)."""
+    from dataflow_spark.operators.filters.dedup import SimHashDeduplicateFilter
+
+    sims = {1: 0b0, 2: 0b1, 3: 0b1111000, 4: 0b1111001, 5: 0b10}
+    banded = spark.createDataFrame(
+        [(0, 7, i, v) for i, v in sims.items()] + [(1, 9, 6, 0)],
+        "band int, h long, _nd_id long, _v long")
+    op = SimHashDeduplicateFilter()
+
+    def pairs():
+        return sorted(tuple(r) for r in op._pairs(banded).collect())
+
+    assert pairs() == [(1, 2), (1, 5)]
+    op.pair_expansion = "all"
+    assert pairs() == [(1, 2), (1, 5), (2, 5), (3, 4)]
+    op.max_bucket_size = 4
+    assert pairs() == [(1, 2), (3, 4)]
 
 
 def test_star_contraction_matches_union_find(spark):
@@ -331,12 +357,11 @@ def test_incremental_minhash(spark):
     ], ["doc_id", "text"])
     op = get_operator("IncrementalMinHashDedupFilter", {
         "input_key": "text", "order_key": "doc_id", "threshold": 0.7})
-    kept = sorted(r["doc_id"] for r in
-                  op.run(new, existing=existing).collect())
+    out = op.run(new, existing=existing)
+    assert out.columns == new.columns  # the engine _row_id is dropped
     # 1 dies against the archive; 3 dies against 2 in-batch
-    assert kept == [2, 4]
-    import pytest as _pt
-    with _pt.raises(ValueError):
+    assert sorted(r["doc_id"] for r in out.collect()) == [2, 4]
+    with pytest.raises(ValueError):
         op.run(new)
 
 
@@ -436,3 +461,51 @@ def test_sql_band_twins_match_column_forms(spark):
     a = sim.select(H.simhash_bands(F.col("s")).alias("b")).collect()
     b = sim.select(F.expr(H.simhash_bands_sql("s")).alias("b")).collect()
     assert a == b
+
+
+def test_cosine_sql_twin_matches_column_form(spark):
+    """SemDedup's verify predicate uses the SQL twin of V.cosine; it
+    must stay value-identical (same left-to-right double arithmetic,
+    null on a zero norm) to the Column form."""
+    from dataflow_spark.functions import vector as V
+
+    vecs = [([0.1, 0.2, 0.3], [0.3, 0.2, 0.1]),
+            ([1e-3, 7.0, -2.5, 0.0], [1e-3, 7.0, -2.5, 1e-9]),
+            ([0.0, 0.0], [1.0, 2.0]),
+            ([3.0, 4.0], [3.0, 4.0])]
+    df = spark.createDataFrame(vecs, "a array<float>, b array<double>")
+    col = df.select(V.cosine(F.col("a"), F.col("b")).alias("c")).collect()
+    sql = df.select(F.expr(V.cosine_sql("a", "b")).alias("c")).collect()
+    assert col == sql
+    assert col[2].c is None
+
+
+@pytest.mark.parametrize("name,params", [
+    ("MinHashDeduplicateFilter", {"input_key": "text"}),
+    ("SimHashDeduplicateFilter", {"input_key": "text"}),
+    ("SemDeduplicateFilter", {"embedding_key": "embedding"}),
+], ids=["minhash", "simhash", "semantic"])
+def test_neardup_edges_have_no_join(spark, monkeypatch, name, params):
+    """Candidate pairs are confirmed by one SQL predicate over the
+    signatures carried through the bucket shuffle, so the edge frame
+    handed to connected components has no Join (no signature lookups
+    against the rep table)."""
+    from dataflow_spark.operators.filters import dedup
+
+    plans = []
+    orig = dedup.connected_components
+
+    def capture(edges, *a, **kw):
+        plans.append(edges._jdf.queryExecution().optimizedPlan().toString())
+        return orig(edges, *a, **kw)
+
+    monkeypatch.setattr(dedup, "connected_components", capture)
+    rows = [(i, f"a shared boilerplate body number {i % 4} for the docs",
+             [float(i % 4 == k) for k in range(4)]) for i in range(12)]
+    df = spark.createDataFrame(
+        rows, "doc_id long, text string, embedding array<double>")
+    op = get_operator(name, {**params, "order_key": "doc_id"})
+    assert op.run(df).count() == 4
+    [plan] = plans
+    nodes = [ln.lstrip(" :+-|").split(" ")[0] for ln in plan.splitlines()]
+    assert "Join" not in nodes, plan
